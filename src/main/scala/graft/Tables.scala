@@ -138,11 +138,16 @@ object Tables {
     * rows term keeps tasks bounded as the corpus grows.
     */
   def computeParallelism(s: SparkSession, d: String, table: String,
-      rowsPerTask: Long = 100000L): Int = {
-    val n = rowCount(s, d, table)
+      rowsPerTask: Long = 100000L): Int =
+    scaledParallelism(s, rowCount(s, d, table), rowsPerTask)
+
+  /** The rule behind [[computeParallelism]] for any measure of input size
+    * (rows, bytes): max(cluster parallelism, ceil(amount / perTask)),
+    * capped at 2^20 tasks.
+    */
+  def scaledParallelism(s: SparkSession, amount: Long, perTask: Long): Int =
     math.max(s.sparkContext.defaultParallelism.toLong,
-      (n + rowsPerTask - 1) / rowsPerTask).min(1 << 20).toInt
-  }
+      (amount + perTask - 1) / perTask).min(1 << 20).toInt
 
   /** Same memo, but ONLY for tables under a published (immutable)
     * artifact root — the ≤1024-row persisted centroid tables whose

@@ -1,5 +1,6 @@
 package graft.etl
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -26,21 +27,52 @@ import org.apache.spark.sql.functions._
   *    one user plays twice in the same (truncated) second.
   *  - Writes take `.mode("overwrite")`; the reference relies on fresh
   *    output dirs and dies on rerun (default ErrorIfExists).
+  *  - The song lake is read as one root listed recursively for `*.json`
+  *    files, not as the reference's four-level `song_data` glob
+  *    (etl.py:61). The glob expands to one root path per file, and past
+  *    Spark's 32-path threshold every read starts a parallel listing job.
+  *    The glob's depth contract is checked on the driver instead: a
+  *    `.json` file at any other depth fails the read, naming the file.
   *
   * Scale posture: every transform is declarative — filters and 5-column
   * projections reach the JSON/parquet scan; dropDuplicates is a partial+
   * final hash aggregate; the song-side of the songplays join broadcasts
   * under the planner threshold and degrades to sort-merge above it; writes
   * are hive-partitioned so downstream reads prune on (year, month).
+  * The song lake root is listed on the driver: a listing job runs only for
+  * a directory level with more than 32 subdirectories, which the
+  * reference's `A–Z` layout never has. The songs sink is hash-clustered on
+  * its partition columns `(year, artist_id)` into an explicit task count
+  * that grows with the scan bytes ([[songsPartitions]]); the clustering
+  * sits before the dedup, which reuses it, so the table costs one shuffle,
+  * every core writes, and each partition directory still gets one file.
   */
 object SparkifyEtl {
 
   // ---- sources (S1, S2) -------------------------------------------------
 
-  /** 4-level glob song scan (etl.py:61–64), explicit schema. */
-  def readSongData(spark: SparkSession, inputDir: String): DataFrame =
-    spark.read.schema(SparkifySchemas.songSchema)
-      .json(s"$inputDir/song_data/*/*/*/*.json")
+  /** Song scan (etl.py:61–64), explicit schema: the `song_data` root,
+    * listed recursively on the driver for `*.json` files. Reads exactly the
+    * files of the reference's four-level glob, or fails naming a `.json`
+    * file at another depth, which the glob would skip.
+    */
+  def readSongData(spark: SparkSession, inputDir: String): DataFrame = {
+    val root = new Path(inputDir, "song_data")
+    val songs = spark.read.schema(SparkifySchemas.songSchema)
+      .option("recursiveFileLookup", "true")
+      .option("pathGlobFilter", "*.json")
+      .json(root.toString)
+    // the listing above already ran; inputFiles reads it back without a job
+    val qualifiedRoot =
+      root.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(root)
+    def depth(f: String): Int = Iterator.iterate(new Path(f))(_.getParent)
+      .takeWhile(p => p != null && p != qualifiedRoot).size
+    songs.inputFiles.find(depth(_) != 4).foreach { f =>
+      throw new IllegalArgumentException(
+        s"song_data holds a .json file outside song_data/*/*/*/*.json: $f")
+    }
+    songs
+  }
 
   /** NDJSON log scan (etl.py:121–124), explicit schema. */
   def readLogData(spark: SparkSession, inputDir: String): DataFrame =
@@ -49,13 +81,27 @@ object SparkifyEtl {
 
   // ---- song-side transforms (etl.py:67–87) ------------------------------
 
-  /** songs(song_id, title, artist_id, year, duration) — etl.py:67–71. */
+  /** songs(song_id, title, artist_id, year, duration) — etl.py:67–71.
+    * Clustered on the sink's partition columns before the dedup, which
+    * reuses the clustering (see "Scale posture").
+    */
   def songsTable(songData: DataFrame): DataFrame =
     songData
       .filter(col("song_id") =!= "")
       .select("song_id", "title", "artist_id", "year", "duration")
       .na.drop("any", Seq("song_id"))
+      .repartition(songsPartitions(songData), col("year"), col("artist_id"))
       .dropDuplicates()
+
+  /** Task count of the songs sink: max(cluster parallelism,
+    * ceil(scan bytes / 128 MiB)), the rule of `Tables.computeParallelism`.
+    * The bytes are the optimized plan's size estimate of the song scan,
+    * which costs no job. The count is explicit so AQE cannot coalesce the
+    * write to one task.
+    */
+  def songsPartitions(songData: DataFrame): Int =
+    graft.Tables.scaledParallelism(songData.sparkSession,
+      songData.queryExecution.optimizedPlan.stats.sizeInBytes.toLong, 128L << 20)
 
   /** artists(artist_id, name, location, latitude, longitude) — etl.py:79–87. */
   def artistsTable(songData: DataFrame): DataFrame =
@@ -179,8 +225,9 @@ object SparkifyEtl {
   // ---- entry points (etl.py:40/93/207) ----------------------------------
 
   def processSongData(spark: SparkSession, inputDir: String, outputDir: String): Unit = {
-    // cache: the reference re-reads the raw JSON for the songplays join
-    // (etl.py:172); caching costs one pass instead of two.
+    // cache: both sinks below read songData, and processLogData's songplays
+    // join re-reads the same lake (etl.py:172); the cache manager matches
+    // that re-read to this plan, so the JSON is scanned once, not three times.
     val songData = readSongData(spark, inputDir).cache()
     writeSongs(songsTable(songData), outputDir)
     writeArtists(artistsTable(songData), outputDir)

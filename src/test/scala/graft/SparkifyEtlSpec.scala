@@ -1,9 +1,17 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path => JPath}
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
-import graft.etl.{SparkifyEtl, SparkifyQueries}
+import graft.etl.{SparkifyEtl, SparkifyQueries, SparkifySchemas}
 
 /** End-to-end golden tests of the Sparkify pipeline over the checked-in
   * JSON fixture (src/test/resources/sparkify — FIXTURES.md §B). The fixture
@@ -25,6 +33,66 @@ class SparkifyEtlSpec extends AnyFunSuite {
     d
   }
   private def table(name: String): DataFrame = spark.read.parquet(s"$outDir/$name")
+
+  /** Runs `body`, returning its result with the ids of the Spark jobs and
+    * the query executions it started. Listener events arrive
+    * asynchronously but in order on one queue, so once a sentinel job
+    * submitted after `body` is seen, every event of `body` has been
+    * delivered.
+    */
+  private def observed[T](body: => T): (T, Seq[Int], Seq[QueryExecution]) = {
+    val sc = spark.sparkContext
+    val key = "sparkify.spec.probe"
+    val tag = s"probe-${System.nanoTime()}"
+    val jobs = new ConcurrentLinkedQueue[Int]()
+    val qes = new ConcurrentLinkedQueue[QueryExecution]()
+    val sentinelSeen = new CountDownLatch(1)
+    val jobListener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty(key)).orNull match {
+          case `tag` => jobs.add(e.jobId)
+          case p if p == s"$tag-sentinel" => sentinelSeen.countDown()
+          case _ =>
+        }
+    }
+    val qeListener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        qes.add(qe)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    sc.addSparkListener(jobListener)
+    spark.listenerManager.register(qeListener)
+    try {
+      sc.setLocalProperty(key, tag)
+      val result = try body finally sc.setLocalProperty(key, s"$tag-sentinel")
+      sc.parallelize(Seq(1), 1).count()
+      assert(sentinelSeen.await(60, TimeUnit.SECONDS), "listener bus never delivered the sentinel job")
+      (result, jobs.asScala.toSeq, qes.asScala.toSeq)
+    } finally {
+      sc.setLocalProperty(key, null)
+      spark.listenerManager.unregister(qeListener)
+      sc.removeSparkListener(jobListener)
+    }
+  }
+
+  /** A temp lake holding `n` song files under song_data/X/Y/Z/. */
+  private def songLake(n: Int): JPath = {
+    val root = Files.createTempDirectory("sparkify_lake")
+    val dir = Files.createDirectories(root.resolve("song_data/X/Y/Z"))
+    (0 until n).foreach { i =>
+      Files.writeString(dir.resolve(f"TRXYZ$i%04d.json"),
+        s"""{"num_songs": 1, "artist_id": "AR$i", "artist_latitude": null, """ +
+          s""""artist_longitude": null, "artist_location": "", "artist_name": "Artist $i", """ +
+          s""""song_id": "SO$i", "title": "Title $i", "duration": ${100.5 + i}, "year": ${1990 + i % 3}}""")
+    }
+    root
+  }
+
+  private def referenceGlobRead(lake: JPath): DataFrame =
+    spark.read.schema(SparkifySchemas.songSchema).json(s"$lake/song_data/*/*/*/*.json")
+
+  private def sameRows(a: DataFrame, b: DataFrame): Boolean =
+    a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
 
   test("songs: empty-string and null song_id dropped, duplicates collapsed, hive layout") {
     val songs = table("songs")
@@ -149,5 +217,61 @@ class SparkifyEtlSpec extends AnyFunSuite {
     }
     parity(s"$fixture/song_data/*/*/*/*.json", graft.etl.SparkifySchemas.songSchema)
     parity(s"$fixture/log-data/*.json", graft.etl.SparkifySchemas.logSchema)
+  }
+
+  test("listing guard: the song lake is listed on the driver, past the 32-path threshold") {
+    val lake = songLake(40)
+    // control: the reference glob hands Spark 40 root paths and lists them in a job
+    val (_, globJobs, _) = observed(referenceGlobRead(lake))
+    assert(globJobs.nonEmpty, "the reference glob read should start a listing job")
+    val (songs, jobs, _) = observed(SparkifyEtl.readSongData(spark, lake.toString))
+    assert(jobs.isEmpty, s"readSongData started jobs ${jobs.mkString(",")} while creating the DataFrame")
+    assert(songs.count() == 40)
+    assert(sameRows(songs, referenceGlobRead(lake)))
+  }
+
+  test("depth contract: non-.json files are skipped; a .json file off the glob's depth fails loudly") {
+    val lake = songLake(3)
+    Files.writeString(lake.resolve("song_data/X/Y/Z/notes.txt"), "not a song")
+    assert(sameRows(SparkifyEtl.readSongData(spark, lake.toString), referenceGlobRead(lake)))
+    for (stray <- Seq("song_data/X/Y/stray.json", "song_data/X/Y/Z/W/deep.json")) {
+      val f = lake.resolve(stray)
+      Files.createDirectories(f.getParent)
+      Files.writeString(f, """{"song_id": "SOSTRAY", "title": "Stray", "artist_id": "ARX", "year": 2000}""")
+      val e = intercept[IllegalArgumentException](SparkifyEtl.readSongData(spark, lake.toString))
+      assert(e.getMessage.contains(f.getFileName.toString), e.getMessage)
+      Files.delete(f)
+    }
+  }
+
+  test("cache: processLogData's re-read of the song lake is served from processSongData's cache") {
+    val lake = songLake(3)
+    SparkifyEtl.processSongData(spark, lake.toString, Files.createTempDirectory("sparkify_cache").toString)
+    val reread = SparkifyEtl.readSongData(spark, lake.toString)
+    try assert(reread.queryExecution.withCachedData.exists(_.isInstanceOf[InMemoryRelation]))
+    finally reread.unpersist()
+  }
+
+  test("songs sink: one parquet file per (year, artist_id) directory; one explicit-count shuffle") {
+    val songsDir = new java.io.File(s"$outDir/songs")
+    val partitionDirs = songsDir.listFiles().filter(_.getName.startsWith("year="))
+      .flatMap(_.listFiles().filter(_.getName.startsWith("artist_id=")))
+    assert(partitionDirs.nonEmpty)
+    partitionDirs.foreach { d =>
+      val parquet = d.list().filter(_.endsWith(".parquet"))
+      assert(parquet.length == 1, s"$d holds ${parquet.mkString(",")}")
+    }
+
+    val songData = SparkifyEtl.readSongData(spark, fixture)
+    val expected = SparkifyEtl.songsPartitions(songData)
+    assert(expected == spark.sparkContext.defaultParallelism)
+    val out = Files.createTempDirectory("sparkify_songs").toString
+    val (_, _, qes) = observed(SparkifyEtl.writeSongs(SparkifyEtl.songsTable(songData), out))
+    val writes = qes.map(_.executedPlan).filter(p => PlanWalk.allNodes(p).exists(_.isInstanceOf[DataWritingCommandExec]))
+    assert(writes.size == 1)
+    val shuffles = PlanWalk.allNodes(writes.head).collect { case s: ShuffleExchangeExec => s }
+    assert(shuffles.size == 1, s"songs write plan:\n${writes.head}")
+    assert(shuffles.head.shuffleOrigin == REPARTITION_BY_NUM)
+    assert(shuffles.head.numPartitions == expected)
   }
 }
